@@ -30,6 +30,17 @@ import graft.ml.{MedianImputer, PopulationScaler, StringModeImputer}
   *    extra (inert) dimension per block vs sklearn's layout;
   *  - assembler order: numeric block first, then categorical blocks
   *    (sklearn ColumnTransformer declaration order, main ipynb:760-763).
+  *
+  * Cost choices, none of which changes a feature value or a grown tree:
+  *  - ONE multi-column `StringIndexer` over all five categorical columns
+  *    (same `alphabetAsc`/`keep` per column): one label-collecting job at
+  *    fit time instead of five, and one saved stage instead of five. Its
+  *    feature vectors equal those of five single-column indexers;
+  *    [[SqlScorer]] reads both layouts, so models saved with five
+  *    indexers still score;
+  *  - the RF caches each row's current node id between tree levels
+  *    (`cacheNodeIds`) instead of re-routing every row from the root of
+  *    every tree at every level; the forest is tree-for-tree the same.
   */
 object LoanPipeline {
 
@@ -42,10 +53,11 @@ object LoanPipeline {
     val medianImpute = new MedianImputer().setInputCols(numericCols.toArray)
     val scale = new PopulationScaler().setInputCols(numericCols.toArray)
     val modeImpute = new StringModeImputer().setInputCols(categoricalCols.toArray)
-    val indexers = categoricalCols.map(c => new StringIndexer()
-      .setInputCol(c).setOutputCol(s"${c}__idx")
+    val indexer = new StringIndexer()
+      .setInputCols(categoricalCols.toArray)
+      .setOutputCols(categoricalCols.map(c => s"${c}__idx").toArray)
       .setStringOrderType("alphabetAsc")
-      .setHandleInvalid("keep"))
+      .setHandleInvalid("keep")
     val encoder = new OneHotEncoder()
       .setInputCols(categoricalCols.map(c => s"${c}__idx").toArray)
       .setOutputCols(categoricalCols.map(c => s"${c}__oh").toArray)
@@ -54,13 +66,14 @@ object LoanPipeline {
     val assembler = new VectorAssembler()
       .setInputCols((numericCols ++ categoricalCols.map(c => s"${c}__oh")).toArray)
       .setOutputCol(featuresCol)
-    (Seq(medianImpute, scale, modeImpute) ++ indexers ++ Seq(encoder, assembler)).toArray
+    Array(medianImpute, scale, modeImpute, indexer, encoder, assembler)
   }
 
   /** M6: notebook RF hyperparams (main ipynb:775). */
   def randomForest: RandomForestClassifier = new RandomForestClassifier()
     .setFeaturesCol(featuresCol).setLabelCol("label")
     .setNumTrees(200).setMaxDepth(8).setMinInstancesPerNode(10).setSeed(42L)
+    .setCacheNodeIds(true)
 
   /** M7: `LogisticRegression(max_iter=2000)`, sklearn defaults: L2 with
     * C=1.0 -> regParam = 1/(C*n); sklearn does not re-standardize inside

@@ -49,9 +49,12 @@ object SqlScorer {
     val assembler = stage({ case a: VectorAssembler => a }, "VectorAssembler")
     val lr = stage({ case m: LogisticRegressionModel => m },
       "LogisticRegressionModel (tree ensembles are not compilable — use Scorer)")
-    val labelsByCol = stages.collect {
-      case i: StringIndexerModel => i.getInputCol -> i.labelsArray(0).toSeq
-    }.toMap
+    // one multi-column indexer, or one single-column indexer per column
+    // (the layout of models saved before the indexers were merged)
+    val labelsByCol = stages.collect { case i: StringIndexerModel =>
+      val cols = if (i.isSet(i.inputCols)) i.getInputCols else Array(i.getInputCol)
+      cols.zip(i.labelsArray.map(_.toSeq))
+    }.flatten.toMap
 
     val w = lr.coefficients.toArray
     var off = 0

@@ -1,6 +1,6 @@
 package graft.loan
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** M9: stratified train/test split (sklearn `train_test_split(stratify=y)`,
@@ -13,6 +13,21 @@ import org.apache.spark.sql.functions._
   * Rows are ranked within each class by a seeded hash; the first
   * ceil(trainFraction * classCount) go to train. Proportions are therefore
   * exact per class (like sklearn), not merely expected (like `sampleBy`).
+  *
+  * Output layout: each side is dealt over the session's
+  * `spark.sql.shuffle.partitions` by its seeded-hash rank (row of rank r
+  * goes to partition r mod n), so every partition of either side holds
+  * the same number of rows of each class, give or take one. The layout
+  * follows from row content alone, not from the input's partitioning.
+  * Without it each side would keep the window's label-keyed layout — one
+  * non-empty partition per class — and every later fit, evaluation and
+  * save would run on at most #classes tasks at any cluster size. The
+  * partition count is explicit, so AQE does not coalesce small sides back
+  * into one partition.
+  *
+  * Size cliff (not fixed here): the class-keyed window itself still runs
+  * as one task per class, so the rank step holds a whole class in one
+  * task however large the input grows.
   *
   * Duplicate rows: identical rows share a hash, so their relative rank is
   * arbitrary — but they are interchangeable, so the split is deterministic
@@ -33,8 +48,10 @@ object StratifiedSplit {
       .withColumn("__rk", row_number().over(byClass.orderBy(orderKey)))
       .withColumn("__n", count(lit(1)).over(byClass))
       .withColumn("__train", col("__rk") <= ceil(col("__n") * trainFraction))
-    val drop = Seq("__rk", "__n", "__train")
-    (ranked.filter(col("__train")).drop(drop: _*),
-     ranked.filter(!col("__train")).drop(drop: _*))
+    val partitions = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    def side(train: Column): DataFrame = ranked.filter(train)
+      .repartitionById(partitions, pmod(col("__rk"), lit(partitions)))
+      .drop("__rk", "__n", "__train")
+    (side(col("__train")), side(!col("__train")))
   }
 }

@@ -66,7 +66,7 @@ class MedianImputerModel(override val uid: String, val medians: Map[String, Doub
       val ss = sparkSession
       import ss.implicits._
       medians.toSeq.toDF("col", "median")
-        .repartition(1).write.mode("overwrite").parquet(MetaIO.dataPath(path))
+        .coalesce(1).write.mode("overwrite").parquet(MetaIO.dataPath(path))
     }
   }
 }

@@ -27,7 +27,7 @@ private[graft] object MetaIO {
       ("defaultParamMap" -> JObject())
     val metadataPath = new Path(path, "metadata").toString
     import spark.implicits._
-    spark.createDataset(Seq(compact(render(json)))).repartition(1)
+    spark.createDataset(Seq(compact(render(json)))).coalesce(1)
       .write.mode("overwrite").text(metadataPath)
   }
 

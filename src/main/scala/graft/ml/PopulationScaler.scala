@@ -65,7 +65,7 @@ class PopulationScalerModel(override val uid: String,
       val ss = sparkSession
       import ss.implicits._
       stats.toSeq.map { case (c, (m, s)) => (c, m, s) }.toDF("col", "mean", "std")
-        .repartition(1).write.mode("overwrite").parquet(MetaIO.dataPath(path))
+        .coalesce(1).write.mode("overwrite").parquet(MetaIO.dataPath(path))
     }
   }
 }

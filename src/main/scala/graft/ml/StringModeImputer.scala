@@ -67,7 +67,7 @@ class StringModeImputerModel(override val uid: String, val modes: Map[String, St
       val ss = sparkSession
       import ss.implicits._
       modes.toSeq.toDF("col", "mode")
-        .repartition(1).write.mode("overwrite").parquet(MetaIO.dataPath(path))
+        .coalesce(1).write.mode("overwrite").parquet(MetaIO.dataPath(path))
     }
   }
 }

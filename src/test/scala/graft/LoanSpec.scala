@@ -2,6 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
+import org.apache.spark.ml.classification.RandomForestClassificationModel
+import org.apache.spark.ml.feature.{StringIndexer, StringIndexerModel}
+import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.functions._
 
 import graft.loan._
@@ -152,7 +157,6 @@ class LoanSpec extends SparkSpec {
   }
 
   test("SqlScorer fused expression matches PipelineModel.transform scores") {
-    import org.apache.spark.ml.functions.vector_to_array
     val prepared = LoanTransforms.withLabel(
       LoanTransforms.cleaned(syntheticLoans(200))).filter(col("label").isNotNull)
     val model = LoanPipeline.pipeline(
@@ -184,6 +188,79 @@ class LoanSpec extends SparkSpec {
       .select(col("loan_id"), vector_to_array(col("probability")).getItem(1))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     a.foreach { case (id, p) => assert(math.abs(p - b(id)) <= 1e-10) }
+  }
+
+  private def preparedLoans(n: Int) = LoanTransforms.withLabel(
+    LoanTransforms.cleaned(syntheticLoans(n))).filter(col("label").isNotNull)
+
+  /** The preprocessing layout of models saved before the indexers were
+    * merged: five single-column StringIndexers, with the same order type
+    * and invalid handling, in place of the one multi-column indexer. */
+  private def fiveIndexerStages: Array[PipelineStage] =
+    LoanPipeline.preprocessingStages.flatMap {
+      case multi: StringIndexer =>
+        multi.getInputCols.zip(multi.getOutputCols).map { case (in, out) =>
+          new StringIndexer().setInputCol(in).setOutputCol(out)
+            .setStringOrderType(multi.getStringOrderType)
+            .setHandleInvalid(multi.getHandleInvalid): PipelineStage
+        }
+      case other => Array(other)
+    }
+
+  test("the multi-column indexer yields the five single-column indexers' features") {
+    val prepared = preparedLoans(300)
+    val merged = new Pipeline().setStages(LoanPipeline.preprocessingStages).fit(prepared)
+    val single = new Pipeline().setStages(fiveIndexerStages).fit(prepared)
+    assert(merged.stages.count(_.isInstanceOf[StringIndexerModel]) == 1)
+    assert(single.stages.count(_.isInstanceOf[StringIndexerModel]) == 5)
+    // an unseen category must land in the same keep slot under both layouts
+    val input = prepared.withColumn("Gender",
+      when(col("loan_id").endsWith("7"), lit("Other")).otherwise(col("Gender")))
+    def features(m: PipelineModel) = m.transform(input)
+      .select(col("loan_id"), col(LoanPipeline.featuresCol)).collect()
+      .map(r => r.getString(0) -> r.getAs[Vector](1)).toMap
+    val (a, b) = (features(merged), features(single))
+    assert(a.size == prepared.count() && a.keySet == b.keySet)
+    a.foreach { case (id, v) => assert(v == b(id), s"$id: $v vs ${b(id)}") }
+  }
+
+  test("RF grows identical trees with and without the node-id cache") {
+    val (train, _) = StratifiedSplit.split(preparedLoans(300), "label", 0.8, 42L)
+    val features = new Pipeline().setStages(LoanPipeline.preprocessingStages)
+      .fit(train).transform(train).cache()
+    try {
+      assert(LoanPipeline.randomForest.getCacheNodeIds)
+      // the first line of toDebugString names the model's uid
+      def trees(m: RandomForestClassificationModel) =
+        m.toDebugString.linesIterator.drop(1).toSeq
+      val cached = trees(LoanPipeline.randomForest.fit(features))
+      val plain = trees(LoanPipeline.randomForest.setCacheNodeIds(false).fit(features))
+      assert(cached.count(_.trim.startsWith("Tree ")) == LoanPipeline.randomForest.getNumTrees)
+      assert(cached == plain)
+    } finally features.unpersist()
+  }
+
+  test("SqlScorer reads the multi-column and the five-indexer saved layouts") {
+    val prepared = preparedLoans(200)
+    Seq("multi-column" -> LoanPipeline.preprocessingStages,
+        "five single-column" -> fiveIndexerStages).foreach { case (layout, stages) =>
+      val dir = Files.createTempDirectory("graft-loan-layout").toString + "/model"
+      new Pipeline().setStages(stages :+ LoanPipeline.logisticRegression(prepared.count()))
+        .fit(prepared).write.overwrite().save(dir)
+      val model = PipelineModel.load(dir)
+      val fused = SqlScorer.score(model, prepared)
+        .select(col("loan_id"), col("p1"), col("prediction"))
+      val mllib = model.transform(prepared)
+        .select(col("loan_id"),
+          vector_to_array(col("probability")).getItem(1).as("p1_ml"),
+          col("prediction").as("pred_ml"))
+      val joined = fused.join(mllib, Seq("loan_id")).collect()
+      assert(joined.length == prepared.count(), layout)
+      joined.foreach { r =>
+        assert(math.abs(r.getDouble(1) - r.getDouble(3)) <= 1e-10, s"$layout: $r")
+        assert(r.getDouble(2) == r.getDouble(4), s"$layout: prediction mismatch at $r")
+      }
+    }
   }
 
   test("JdbcUpsert: keyed upsert into Derby is idempotent and last-write-wins") {

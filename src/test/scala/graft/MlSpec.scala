@@ -92,4 +92,17 @@ class MlSpec extends SparkSpec {
     val (train2, _) = StratifiedSplit.split(df.repartition(7), "label", 0.8, 42L)
     assert(train.select("id").except(train2.select("id")).count() == 0)
   }
+
+  test("StratifiedSplit spreads both sides evenly over the shuffle partitions") {
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    val df = (1 to 2000).map(i => (i.toLong, if (i % 3 == 0) 1.0 else 0.0))
+      .toDF("id", "label")
+    val (train, test) = StratifiedSplit.split(df, "label", 0.8, seed = 42L)
+    Seq("train" -> train, "test" -> test).foreach { case (side, part) =>
+      val sizes = part.rdd.mapPartitions(it => Iterator(it.size)).collect()
+      assert(sizes.length == 4, s"$side: ${sizes.mkString("/")}")
+      assert(sizes.min > 0 && sizes.max <= 1.5 * sizes.min,
+        s"$side partition sizes ${sizes.mkString("/")}")
+    }
+  }
 }
