@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times the headline queries (Queries.benchNames) against
   * SPARK_GRAFT_SF_DIR and prints ONE COMPACT JSON line (stdout's last
   * line, qNN-prefixed query keys, < 1900 chars — the driver only records
@@ -34,27 +32,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val cpus = Session.cores
+    // same scale gate as Verify: analysis-time ScaleGuard on every
+    // benched plan (see plans/ScaleGuard.scala)
+    val spark = Session.builder(scaleGuard = true)
       .appName("graft-bench")
-      // same scale gate as Verify: analysis-time ScaleGuard on every
-      // benched plan (see plans/ScaleGuard.scala)
-      .withExtensions(new GraftExtensions)
-      .config("spark.graft.scaleGuard", "true")
-      // see Verify: SPARK_GRAFT_STATESTORE=rocksdb opts the streaming
-      // queries onto the RocksDB state store
-      .config("spark.sql.streaming.stateStore.providerClass",
-        if (sys.env.get("SPARK_GRAFT_STATESTORE").contains("rocksdb"))
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        else "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // same rationale as Verify: never emit legacy INT96 timestamps
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

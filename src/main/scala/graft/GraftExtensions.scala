@@ -12,10 +12,11 @@ import graft.functions.{AudioStats, CosineSimilarity, DamerauLevenshtein, DotPro
   *
   * Two installation paths:
   *  - declarative (the library way): `spark.sql.extensions=graft.GraftExtensions`
-  *    or `SparkSession.builder.withExtensions(new GraftExtensions)`;
-  *  - imperative (what graft's own entry points use): [[GraftFunctions.register]]
-  *    — idempotent, works on any live session, so driver-owned sessions
-  *    that never saw the config still resolve the functions.
+  *    or `SparkSession.builder.withExtensions(new GraftExtensions)` — what
+  *    graft's own mains and specs use, through [[Session.builder]];
+  *  - imperative: [[GraftFunctions.register]] — idempotent, works on any
+  *    live session; `sources.Tables.load` calls it so driver-owned
+  *    sessions that never saw the config still resolve the functions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,37 +14,16 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2 && !sqlOnly) Some(args(2).split(",").toSet)
       else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // the engine's own scale contract gates the correctness sweep: the
+    // analysis-time ScaleGuard (plans/ScaleGuard.scala) rejects any
+    // query plan with an unpartitioned window over raw rows or a
+    // condition-free raw×raw join — so all 353 queries are proven
+    // scale-safe at RUNTIME every round, not just in PlanSpec
+    val builder = Session.builder(scaleGuard = true)
     // SPARK_GRAFT_MASTER: the invariance matrix's task-retry row needs a
     // master that allows retries (local[N] pins maxFailures=1; the conf
     // key is ignored in local mode) — e.g. local[4,4].
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      // the engine's own scale contract gates the correctness sweep: the
-      // analysis-time ScaleGuard (plans/ScaleGuard.scala) rejects any
-      // query plan with an unpartitioned window over raw rows or a
-      // condition-free raw×raw join — so all 353 queries are proven
-      // scale-safe at RUNTIME every round, not just in PlanSpec
-      .withExtensions(new GraftExtensions)
-      .config("spark.graft.scaleGuard", "true")
-      // SPARK_GRAFT_STATESTORE=rocksdb runs every streaming bounded-run
-      // query on RocksDBStateStoreProvider — the 100 TB-state production
-      // provider — so the oracle gate can exercise that code path too
-      // (default provider otherwise; COVERAGE.md records the RocksDB
-      // sweep). Same knob on Bench.
-      .config("spark.sql.streaming.stateStore.providerClass",
-        if (sys.env.get("SPARK_GRAFT_STATESTORE").contains("rocksdb"))
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        else "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // never emit legacy INT96: the driver's reader maps INT96 to
-      // nanosecond timestamps, where far-future sentinels (9999-12-31)
-      // overflow int64-ns and wrap to 1816 — bit-identical values then
-      // hash-mismatch (r5 q85). INT64 micros round-trips the full range.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
+    sys.env.get("SPARK_GRAFT_MASTER").foreach(builder.master)
     // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2": the execution-environment
     // invariance matrix (COVERAGE.md) — the same oracle sweep re-run under
     // a prime shuffle-partition count (results must not depend on

@@ -2,7 +2,6 @@ package graft.loan
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Profiling
@@ -18,12 +17,8 @@ import graft.sources.JdbcUpsert
 object LoanDemo {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(614)
-    val spark = SparkSession.builder()
-      .master("local[4]")
+    val spark = graft.Session.builder(scaleGuard = true)
       .appName("graft-loan-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val work = Files.createTempDirectory("loan-demo").toString

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -19,12 +20,17 @@ import org.apache.spark.storage.StorageLevel
   * rebased onto the cached rows — persist alone does not truncate plans,
   * and the body's two references to the running labeling would otherwise
   * double the plan tree per round (analysis OOMs near round 25; pinned by
-  * PropertySpec's path-graph test). The truncation trade: losing a cached
-  * block recomputes through earlier rounds, so production long-diameter
-  * runs should add a reliable `checkpoint()` every ~10 rounds; and at
-  * 100 TB scale the large-star/small-star variant (Kiveris et al. '14)
-  * cuts round count from diameter to ~log(diameter) — neither needed for
-  * dedup-shaped near-clique graphs.
+  * PropertySpec's path-graph test). The rebase truncates the plan but
+  * not the RDD lineage: each round's tasks still deserialize every
+  * earlier round's cached-plan chain, and a 1000-node path's 30 rounds
+  * overflowed the executor thread stack (1 MB default `-Xss`; the same
+  * loop overflowed at 20 rounds under 512 KB). So every
+  * [[Rebase.Every]]-th round the rebased rows are also locally
+  * checkpointed, which bounds that chain. The trade: a lost block past a
+  * checkpoint fails the query instead of recomputing (local checkpoints
+  * live in executor storage). At 100 TB scale the large-star/small-star
+  * variant (Kiveris et al. '14) cuts round count from diameter to
+  * ~log(diameter) — not needed for dedup-shaped near-clique graphs.
   *
   * Deterministic: labels are ids, min is order-independent.
   */
@@ -132,10 +138,9 @@ object Components {
     // long-diameter graphs (pinned by PropertySpec's 1000-node path).
     // Caching does NOT truncate plans, so each round's result is rebased
     // onto a LogicalRDD over its cached rows: constant-depth plans, and
-    // the scan still serves from the persisted frame. Trade documented in
-    // the scaladoc: recompute-on-block-loss cascades to earlier rounds;
-    // production long-diameter runs should reliable-checkpoint every ~10
-    // rounds instead.
+    // the scan still serves from the persisted frame ([[Rebase]] also
+    // bounds the RDD lineage; trade in the scaladoc).
+    val rebase = new Rebase
     var cached = comp // the currently-persisted frame backing `comp`
     // The r13 round was two joins + one aggregation: neighbor-min by src,
     // then a LEFT join back onto comp to keep no-update vertices and
@@ -166,13 +171,14 @@ object Components {
       val changed = updated.filter(col("chg")).count()
       cached.unpersist()
       cached = updated
-      comp = updated.sparkSession.createDataFrame(updated.rdd, updated.schema)
+      comp = rebase(updated)
       converged = changed == 0
       i += 1
     }
     if (!converged) {
       marked.foreach(_.unpersist())
       cached.unpersist()
+      rebase.release()
       sym.unpersist()
       e.unpersist()
       throw new IllegalStateException(
@@ -201,6 +207,7 @@ object Components {
     result.count()
     marked.foreach(_.unpersist())
     cached.unpersist()
+    rebase.release()
     sym.unpersist()
     e.unpersist()
     result
@@ -230,8 +237,8 @@ object Components {
     * `exceptAll`, not a hash signature that could collide silently). Same
     * lineage discipline as the label loop: each round's edges are
     * persisted, the previous freed, and the plan rebased onto the cached
-    * rows. Deterministic: min is order-independent. Loud-fails past
-    * `maxIter` like [[connectedComponents]]. */
+    * rows through [[Rebase]]. Deterministic: min is order-independent.
+    * Loud-fails past `maxIter` like [[connectedComponents]]. */
   def alternatingComponents(nodes: DataFrame, idCol: String,
       edges: DataFrame, maxIter: Int = 50): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -271,6 +278,7 @@ object Components {
       }
       out.filter(col("src") =!= col("dst")).distinct()
     }
+    val rebase = new Rebase
     var e = init
     var cached = init
     var converged = false
@@ -284,12 +292,13 @@ object Components {
       converged = nNext == nEdges && next.exceptAll(e).isEmpty
       cached.unpersist()
       cached = next
-      e = next.sparkSession.createDataFrame(next.rdd, next.schema)
+      e = rebase(next)
       nEdges = nNext
       i += 1
     }
     if (!converged) {
       cached.unpersist()
+      rebase.release()
       throw new IllegalStateException(
         s"alternatingComponents did not converge within $maxIter rounds — " +
           "pathological growth; raise maxIter (rounds contract the graph " +
@@ -304,6 +313,7 @@ object Components {
     val chained = e.alias("x").join(e.alias("y"), col("x.dst") === col("y.src"))
     if (!multiParent.isEmpty || !chained.isEmpty) {
       cached.unpersist()
+      rebase.release()
       throw new IllegalStateException(
         "alternatingComponents fixpoint is not a star forest — refusing " +
           "to read off a labeling from a malformed edge set")
@@ -315,7 +325,46 @@ object Components {
       .persist(StorageLevel.MEMORY_AND_DISK)
     result.count()
     cached.unpersist()
+    rebase.release()
     result
+  }
+
+  /** Rebases an iterative loop's per-round frame onto a LogicalRDD over
+    * its rows, so the next round's plan has constant depth. Every
+    * [[Rebase.Every]]-th rebased RDD is also locally checkpointed: the
+    * next round's job materializes it, and from then on no task carries
+    * the lineage of the rounds before it. A round's checkpoint is freed
+    * once the next checkpoint has been materialized; [[release]] frees
+    * whatever is left, after the caller has materialized its result. */
+  private final class Rebase {
+    private var rounds = 0
+    private var marked: Option[RDD[Row]] = None // not yet materialized
+    private var held: Option[RDD[Row]] = None
+
+    /** `df` must be persisted and materialized, built by a job that read
+      * the previous rebase. */
+    def apply(df: DataFrame): DataFrame = {
+      rounds += 1
+      marked.foreach { m => held.foreach(_.unpersist()); held = Some(m) }
+      marked = None
+      val rows = df.rdd
+      if (rounds % Rebase.Every == 0) {
+        rows.localCheckpoint()
+        marked = Some(rows)
+      }
+      df.sparkSession.createDataFrame(rows, df.schema)
+    }
+
+    def release(): Unit = {
+      marked.foreach(_.unpersist())
+      held.foreach(_.unpersist())
+    }
+  }
+
+  private object Rebase {
+    /** Rounds per checkpoint: above the 5 rounds the catalog's dedup
+      * graphs take, well below the 20 that overflowed a 512 KB stack. */
+    val Every = 10
   }
 
   /** Exact dedup survivors: the smallest id of every component (the

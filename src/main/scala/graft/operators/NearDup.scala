@@ -229,21 +229,17 @@ object NearDup {
     * dropped: recall stays exact.) Everything shuffles 16-byte
     * (id, long) tuples; the df aggregation and rank window are linear.
     *
-    * @param materialize persist the shingle-hash table — referenced four
-    *   times (df pass, rank pass, full index, verify sets); same measured
-    *   rationale as [[prefixJaccardPairs]]. */
+    * The shingle-hash table is always persisted: it is referenced four
+    * times (df pass, rank pass, full index, verify sets); same measured
+    * rationale as [[prefixJaccardPairs]]. */
   def containmentCandidatePairs(docs: DataFrame, idCol: String,
-      textCol: String, n: Int = 3, minC: Double = 0.5,
-      materialize: Boolean = true): DataFrame = {
+      textCol: String, n: Int = 3, minC: Double = 0.5): DataFrame = {
     require(minC > 0.0 && minC <= 1.0, s"minC must be in (0, 1], got $minC")
     // persist the per-document ARRAY frame (one row per doc), not the
     // exploded rows — same coverage (every downstream reference derives
     // from it), strictly less cached state
-    val arrs0 = shingleHashArrays(docs, idCol, textCol, n)
-    val arrs =
-      if (materialize)
-        arrs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else arrs0
+    val arrs = shingleHashArrays(docs, idCol, textCol, n)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sized = arrs.select(col("id"), col("sz"), explode(col("sh")).as("hs"))
     val cand = containmentCandidatesSized(sized, minC)
     // merge hints here too: the per-doc shingle-SET side is corpus-sized
@@ -347,19 +343,16 @@ object NearDup {
     * and a per-document rank window over narrow (id, long) rows. Both are
     * linear; everything shuffles 16-byte tuples, never span text.
     *
-    * @param materialize persist the shingle-hash table, referenced three
-    *   times (frequency pass, rank pass, verify sets); same measured
-    *   rationale as [[minhashNearDupPairs]]'s default-on knob. */
+    * The shingle-hash table is always persisted: it is referenced three
+    * times (frequency pass, rank pass, verify sets); same measured
+    * rationale as [[minhashNearDupPairs]]. */
   def prefixJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, minJ: Double = 0.6, materialize: Boolean = true): DataFrame = {
+      n: Int = 3, minJ: Double = 0.6): DataFrame = {
     require(minJ > 0.0 && minJ <= 1.0, s"minJ must be in (0, 1], got $minJ")
     // persist the per-document ARRAY frame — one row per doc, every
     // reference (freq pass, rank pass, verify sets) derives from it
-    val arrs0 = shingleHashArrays(docs, idCol, textCol, n)
-    val arrs =
-      if (materialize)
-        arrs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else arrs0
+    val arrs = shingleHashArrays(docs, idCol, textCol, n)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val rows = arrs.select(col("id"), col("sz"), explode(col("sh")).as("hs"))
     val freq = rows.groupBy(col("hs")).agg(count(lit(1)).as("df"))
     val ranked = rows
@@ -370,20 +363,17 @@ object NearDup {
       .join(freq.hint("merge"), Seq("hs"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("id")).orderBy(col("df"), col("hs"))))
-    val prefix0 = ranked
-      .filter(col("rk") <= col("sz") - floor(lit(minJ) * col("sz")) + 1)
-      .select(col("id"), col("hs"), col("sz"))
     // persist the prefix index too: the candidate self-join references it
     // on BOTH sides, and an unpersisted prefix re-runs the df aggregation,
     // the rows⋈freq merge join and the rank window per side (r14 plan
     // audit: two Window + two SortMergeJoin + two freq HashAggregate
     // subtrees in the q88 plan for one logical prefix pass — guide §5,
     // §2.4). Narrow (id, long, long) rows, a prefix-sized fraction of the
-    // shingle index, under the same materialize knob as `arrs`.
-    val prefix =
-      if (materialize)
-        prefix0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else prefix0
+    // shingle index.
+    val prefix = ranked
+      .filter(col("rk") <= col("sz") - floor(lit(minJ) * col("sz")) + 1)
+      .select(col("id"), col("hs"), col("sz"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // merge hint: same rationale (and same measured run-to-run AQE
     // broadcast flip) as containmentCandidates — both sides data-sized
     val cand = prefix.alias("a").join(prefix.alias("b").hint("merge"),
@@ -549,31 +539,25 @@ object NearDup {
     * Jaccard — so the *output* is exact (same rows as [[jaccardPairs]]) while
     * the *work* is linear: shingle → banded signature → bucket join →
     * verify only colliding pairs against the collected shingle sets. */
-  /** @param materialize persist the shingle-row table (MEMORY_AND_DISK) —
-    * the standard "materialize the signature table" step of production
-    * LSH dedup, ON by default. The shingle subtree (window + distinct,
-    * the expensive part) is referenced twice per action (banding side +
-    * verify side) and Spark recomputes un-persisted subtrees per
-    * reference, so caching wins even for a RUN-ONCE action — measured
-    * min-of-3 at sf0.1 (tools/AbMaterialize): pairs 4.6→1.1 s, survivors
-    * 4.5→1.1 s, components 5.8→2.4 s. Callers that cannot spare executor
-    * storage (or feed a one-reference consumer) can turn it off; callers
-    * in long-lived sessions should free the cache when done (the
-    * Verify/Bench mains sweep persistent RDDs between queries). Contrast
-    * [[simhashNearDupPairs]]/[[Similarity.lshNearDupPairs]], whose
-    * re-referenced subtrees are scan-speed projections — caching those
-    * measured slightly WORSE (1.8→2.0 s, 2.7→3.1 s), so they default
-    * off. */
+  /** The shingle table is always persisted (MEMORY_AND_DISK) — the
+    * standard "materialize the signature table" step of production LSH
+    * dedup. The shingle subtree (the expensive part) is referenced twice
+    * per action (banding side + verify side) and Spark recomputes
+    * un-persisted subtrees per reference, so caching wins even for a
+    * RUN-ONCE action — measured min-of-3 at sf0.1 on 32 cores: pairs
+    * 4.6→1.1 s, survivors 4.5→1.1 s, components 5.8→2.4 s. Callers in
+    * long-lived sessions free the cache when done (the Verify/Bench mains
+    * clear it between queries). Contrast [[simhashNearDupPairs]] and
+    * [[Similarity.lshNearDupPairs]], which never persist: their
+    * re-referenced subtrees are scan-speed projections, and caching those
+    * measured slightly WORSE (1.8→2.0 s, 2.7→3.1 s). */
   def minhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, minJ: Double = 0.6, numHashes: Int = 192,
-      bandRows: Int = 3, materialize: Boolean = true): DataFrame = {
-    def mat(df: DataFrame): DataFrame =
-      if (materialize)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
+      bandRows: Int = 3): DataFrame = {
     // persist the per-document ARRAY frame — the banding kernel and the
     // verify sets both derive from it, and it is one row per doc
-    val arrs = mat(shingleHashArrays(docs, idCol, textCol, n))
+    val arrs = shingleHashArrays(docs, idCol, textCol, n)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bands = minhashBandsFromArrays(arrs, numHashes, bandRows)
     val cand = lshCandidates(bands)
     val sets = arrs
@@ -615,10 +599,8 @@ object NearDup {
     * candidate row: ONE sketch-kernel pass and zero joins (r13; the
     * round-12 shape re-attached sketches via two corpus-sized id
     * equi-joins, each of which also re-ran the unpersisted sketch
-    * subtree). `materialize` is now a no-op knob kept for API
-    * compatibility — the sketch table is referenced exactly once, so
-    * there is nothing left to cache (the r12 AbMaterialize measurement
-    * that sized this trade-off is moot under the single-reference plan).
+    * subtree). Nothing is persisted: the sketch table is referenced
+    * exactly once, so there is nothing to cache.
     * Unrelated documents (uniform sketches) collide per band with
     * probability 2^-bits (2^-15 at the default), so false candidates are
     * rare at small n — but the expected false-candidate COUNT is
@@ -631,7 +613,7 @@ object NearDup {
     * residual; identical-content cliques are the output itself, as in
     * every dedup pipeline. */
   def simhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, materialize: Boolean = false): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 29,
       s"maxHamming must be in [0, 29], got $maxHamming")
     val numBands = maxHamming + 1
@@ -639,13 +621,9 @@ object NearDup {
     // fan-out before the sketch kernel: the md5-per-token sketch is the
     // expensive stage, and it must not inherit a row-group-starved
     // scan's parallelism (Par.fanOut doc; no-op at scale)
-    val sk0 = fanOut(docs.select(col(idCol).as("id"),
+    val sk = fanOut(docs.select(col(idCol).as("id"),
         col(textCol).as("__text")), "id")
       .select(col("id"), TextHash.simhash(col("__text")).as("sk"))
-    val sk =
-      if (materialize)
-        sk0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sk0
     // NULL sketches (contentless docs, q29's contract) never band: a NULL
     // slice would land every such doc in ONE (band, NULL) bucket — a
     // planted skew key emitting k²/2 doomed candidates for k NULL docs
@@ -707,18 +685,15 @@ object NearDup {
     *                    ([[shingleHashRows]] output) — verify-tier state
     * @param corpusBands warm (id, band, bhash) signature table
     *                    ([[minhashBands]] output) — discovery-tier state
-    * @param materialize persist the DELTA's shingle rows (referenced by
-    *                    banding + verify; the corpus state needs no cache
-    *                    — each side is referenced once) */
+    *
+    * The DELTA's shingle table is always persisted (referenced by banding
+    * + verify, as in [[minhashNearDupPairs]]); the corpus state needs no
+    * cache — each side is referenced once. */
   def deltaMinhashPairs(corpusRows: DataFrame, corpusBands: DataFrame,
       delta: DataFrame, idCol: String, textCol: String, n: Int = 3,
-      minJ: Double = 0.6, numHashes: Int = 192, bandRows: Int = 3,
-      materialize: Boolean = true): DataFrame = {
-    val dArrs0 = shingleHashArrays(delta, idCol, textCol, n)
-    val dArrs =
-      if (materialize)
-        dArrs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else dArrs0
+      minJ: Double = 0.6, numHashes: Int = 192, bandRows: Int = 3): DataFrame = {
+    val dArrs = shingleHashArrays(delta, idCol, textCol, n)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dRows = dArrs.select(col("id"), explode(col("sh")).as("hs"))
     val dBands = minhashBandsFromArrays(dArrs, numHashes, bandRows)
     deltaMinhashPairsFromRows(corpusRows, corpusBands, dRows, dBands, minJ)
@@ -893,27 +868,23 @@ object NearDup {
     * Scale shape: maxHamming+1 (id, hi, lo, band, value) rows per
     * document, one bucket-grouped expansion with the 16-byte sketch
     * riding as struct members — one sketch pass, zero joins (r13, same
-    * rewrite as [[simhashNearDupPairs]]); `materialize` is a no-op knob
-    * kept for API compatibility. maxHamming ≤ 31
+    * rewrite as [[simhashNearDupPairs]]); nothing is persisted, since
+    * the sketch table is referenced once. maxHamming ≤ 31
     * keeps every band ≥ 4 bits (beyond that the collision rate makes
     * banding pointless — use the exact scan). */
   def simhash128NearDupPairs(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, materialize: Boolean = false): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 31,
       s"maxHamming must be in [0, 31], got $maxHamming")
     val numBands = maxHamming + 1
     val bits = math.min(128 / numBands, 63)
     // fan-out before the sketch kernel — same rationale as the 60-bit
     // pipeline (Par.fanOut doc; no-op at scale)
-    val sk0 = fanOut(docs.select(col(idCol).as("id"),
+    val sk = fanOut(docs.select(col(idCol).as("id"),
         col(textCol).as("__text")), "id")
       .select(col("id"), TextHash.simhash128(col("__text")).as("sk128"))
       .select(col("id"), col("sk128").getItem(0).as("hi"),
         col("sk128").getItem(1).as("lo"))
-    val sk =
-      if (materialize)
-        sk0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sk0
     // NULL-sketch guard: same skew-key rationale as [[simhashNearDupPairs]]
     // (hi/lo are NULL together — one word's null test covers the sketch)
     // r13: sketch halves ride through the band buckets as struct members

@@ -273,21 +273,16 @@ object Similarity {
     *
     * The (id, vec-as-double) projection is referenced four times (both
     * bucketing sides + both verify sides) and recomputed per reference;
-    * `materialize` caches it once. Measured at sf0.1
-    * (tools/AbMaterialize) the cache is a slight LOSS for a run-once
-    * action (2.66 s recomputed vs 3.06 s cached — the projection is
-    * scan-speed), so it defaults off; same knob family as
-    * [[NearDup.minhashNearDupPairs]], whose expensive shingle subtree
-    * makes the opposite default right. */
+    * it is never persisted. Measured at sf0.1 on 32 cores, caching it is
+    * a slight LOSS for a run-once action (2.66 s recomputed vs 3.06 s
+    * cached — the projection is scan-speed), the opposite of
+    * [[NearDup.minhashNearDupPairs]], whose expensive shingle subtree is
+    * persisted. */
   def lshNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
       minSim: Double, numPlanes: Int = DefaultPlanes,
-      numTables: Int = DefaultTables, materialize: Boolean = false): DataFrame = {
-    val base0 = df.select(col(idCol).as("id"),
+      numTables: Int = DefaultTables): DataFrame = {
+    val base = df.select(col(idCol).as("id"),
       Vectors.asDouble(col(vecCol)).as("__v"))
-    val base =
-      if (materialize)
-        base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else base0
     val b = base.select(col("id"), posexplode(
       bucketIds(col("__v"), numPlanes, numTables)).as(Seq("table", "bucket")))
     val cand = b.select(col("table"), col("bucket"), col("id").as("id_a"))

@@ -5,8 +5,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.functions.AudioUtil
 import graft.sources.Artifacts
 
@@ -95,10 +93,7 @@ object GenAudioFixture {
       g_sample_count: Option[Long])
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Session.builder(scaleGuard = true)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

@@ -6,8 +6,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.SparkSession
-
 import graft.functions.{ImageUtil, VideoUtil}
 import graft.sources.Artifacts
 
@@ -100,10 +98,7 @@ object GenVideoFixture {
       g_pixel_count: Option[Long])
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Session.builder(scaleGuard = true)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

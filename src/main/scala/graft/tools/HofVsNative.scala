@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Similarity, TextHash, Vectors}
@@ -10,12 +9,9 @@ import graft.operators.{Similarity, TextHash, Vectors}
 object HofVsNative {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Session.builder(scaleGuard = true)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftFunctions.register(spark)
     val docs = graft.sources.Tables.load(spark, dir, "documents")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
 

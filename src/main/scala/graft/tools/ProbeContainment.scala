@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off scale probe for the containment discovery tier (r10: q354's
@@ -12,9 +11,8 @@ object ProbeContainment {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/tmp/sf1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.builder(scaleGuard = true)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (dir <- dirs) {
       val docs = graft.sources.Tables.load(spark, dir, "documents")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.GraphCore
@@ -11,12 +10,8 @@ import graft.operators.GraphCore
 object ProfileKcore {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val cpus = if (args.length > 1) args(1) else "4"
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = if (args.length > 1) args(1).toInt else graft.Session.cores
+    val spark = graft.Session.builder(cpus, scaleGuard = true).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def t[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

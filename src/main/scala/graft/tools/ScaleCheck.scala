@@ -22,14 +22,9 @@ object ScaleCheck {
     // optional 2nd arg "containment": run only the round-9 hot-shingle
     // containment section (the q354 candidate-tier scale record)
     val containmentOnly = args.length > 1 && args(1) == "containment"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Session.builder(scaleGuard = true)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftFunctions.register(spark)
 
     def time(label: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
@@ -219,13 +214,13 @@ object ScaleCheck {
         val tCand = (System.nanoTime() - t0) / 1e9
         val t1 = System.nanoTime()
         val exact = NearDup.containmentPairs(docs, "doc_id", "text", 3, 0.5)
-        val pf = NearDup.containmentCandidatePairs(docs, "doc_id", "text",
-          3, 0.5, materialize = false)
+        val pf = NearDup.containmentCandidatePairs(docs, "doc_id", "text", 3, 0.5)
         val same = exact.except(pf).count() == 0 && pf.except(exact).count() == 0
         println(f"containment hot-shingle h=$h%-5d plain-index pairs=$plainPairs%9d  " +
           f"prefix candidates=$nCand%6d ($tCand%5.2f s)  output==verify-tier: $same " +
           f"(${(System.nanoTime() - t1) / 1e9}%5.2f s)")
-        rows.unpersist()
+        // frees `rows` and the tables the candidate tier persisted
+        spark.catalog.clearCache()
       }
     }
 

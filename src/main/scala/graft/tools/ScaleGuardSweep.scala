@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.{GraftExtensions, Queries}
+import graft.{Queries, Session}
 
 /** Authoring-time sweep: build every catalog query in a session with the
   * analysis-time [[graft.plans.ScaleGuard]] ENABLED (the same session
@@ -16,13 +14,7 @@ import graft.{GraftExtensions, Queries}
 object ScaleGuardSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.graft.scaleGuard", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.builder(scaleGuard = true)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val only: Option[String] = if (args.length > 1) Some(args(1)) else None

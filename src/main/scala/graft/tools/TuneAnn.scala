@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Similarity, Vectors}
@@ -12,13 +11,10 @@ import graft.operators.{Similarity, Vectors}
   */
 object TuneAnn {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[16]")
+    val spark = graft.Session.builder(scaleGuard = true)
       .appName("tune-ann")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftFunctions.register(spark)
 
     val combos = Seq((4, 16), (3, 24), (3, 32), (2, 32), (2, 48))
     for (sfDir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")) {

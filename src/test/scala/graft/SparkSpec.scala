@@ -11,19 +11,12 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    // the mains' session policy with the ScaleGuard off (specs opt in
+    // on a newSession()); functions come from the declarative extension
+    val s = Session.builder(4, scaleGuard = false)
       .appName("graft-test")
-      // declarative extension install, matching the Verify/Bench session
-      // shape (functions + the ScaleGuard check rule — the guard itself
-      // stays off unless a test opts in on a newSession())
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(s)
     s
   }
 }

@@ -49,8 +49,7 @@ class TextOpsSpec extends SparkSpec {
     // non-representable t where ⌊t·sz⌋ rounding matters
     for (t <- Seq(0.31, 0.6, 0.9)) {
       val exact = NearDup.jaccardPairs(docs, "doc_id", "text", 3, t)
-      val pf = NearDup.prefixJaccardPairs(docs, "doc_id", "text", 3, t,
-        materialize = false)
+      val pf = NearDup.prefixJaccardPairs(docs, "doc_id", "text", 3, t)
       assert(exact.except(pf).count() == 0 && pf.except(exact).count() == 0,
         s"threshold $t")
     }
@@ -68,6 +67,7 @@ class TextOpsSpec extends SparkSpec {
       .filter(col("rk") <= col("sz") - floor(lit(0.6) * col("sz")) + 1)
       .count()
     assert(prefixLen < full / 2, s"prefix $prefixLen vs full $full")
+    spark.catalog.clearCache()
   }
 
   test("containmentPairs flags a doc quoted inside a longer one that jaccard misses") {
@@ -94,8 +94,7 @@ class TextOpsSpec extends SparkSpec {
     // non-representable t where the ⌊t·sz⌋ rounding matters
     for (t <- Seq(0.31, 0.5, 0.9)) {
       val exact = NearDup.containmentPairs(docs, "doc_id", "text", 3, t)
-      val pf = NearDup.containmentCandidatePairs(docs, "doc_id", "text", 3, t,
-        materialize = false)
+      val pf = NearDup.containmentCandidatePairs(docs, "doc_id", "text", 3, t)
       assert(exact.count() > 0, s"threshold $t — vacuous fixture")
       assert(exact.except(pf).count() == 0 && pf.except(exact).count() == 0,
         s"threshold $t")
@@ -106,8 +105,9 @@ class TextOpsSpec extends SparkSpec {
     val planted = Seq((1L, short), (2L, long),
       (3L, "unrelated text entirely different words here")).toDF("doc_id", "text")
     val got = NearDup.containmentCandidatePairs(planted, "doc_id", "text",
-      n = 3, minC = 0.9, materialize = false).collect()
+      n = 3, minC = 0.9).collect()
     assert(got.length == 1 && got(0).getAs[Double]("cont_a_in_b") == 1.0)
+    spark.catalog.clearCache()
   }
 
   test("containment candidates stay subquadratic on a planted hot shingle") {
@@ -508,10 +508,8 @@ class TextOpsSpec extends SparkSpec {
     // at-scale contract that made q27/q28/q60's widest shuffles narrow
     val plans = Seq(
       NearDup.jaccardPairs(docs, "doc_id", "text", 3, 0.3),
-      NearDup.minhashNearDupPairs(docs, "doc_id", "text", 3, 0.3, 16, 2,
-        materialize = false),
-      NearDup.prefixJaccardPairs(docs, "doc_id", "text", 3, 0.3,
-        materialize = false),
+      NearDup.minhashNearDupPairs(docs, "doc_id", "text", 3, 0.3, 16, 2),
+      NearDup.prefixJaccardPairs(docs, "doc_id", "text", 3, 0.3),
       NearDup.contaminationHits(docs, bench, "doc_id", "text", 3))
     plans.foreach { df =>
       val explained = df.queryExecution.explainString(
@@ -524,6 +522,7 @@ class TextOpsSpec extends SparkSpec {
           s"string shingle column in exchange keys: $keys\n$explained")
       }
     }
+    spark.catalog.clearCache()
   }
 
   test("bpeTokenCount matches the DuckDB-checked GPT-2-ish segmentation") {
